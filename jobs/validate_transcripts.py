@@ -5,14 +5,18 @@
         --input  <parquet dir | iceberg://cat.db.transcripts> \
         --conversations <parquet dir | iceberg://...> \
         --out    <output dir | iceberg://cat.db> \
-        --run-id nightly-2025-01-01 [--resume] [--salt-buckets 32] \
-        [--spec spec.json] [--mode coerce|strict]
+        --run-id nightly-2025-01-01 [--checkpointed | --incremental] \
+        [--bucket-col bucket] [--spec spec.json] [--mode coerce|strict]
 
-Runs the full check suite (row-level fused pass + uniqueness + ordering +
-referential + column stats + t-digest drift) with per-bucket checkpoints
-and a lineage manifest; re-running with --resume --run-id X continues an
-interrupted run. On a cluster the SparkSession comes from spark-submit's
-conf (no master hardcoded here).
+By default runs the fused full validation (row-level checks + uniqueness
++ ordering + referential) in one pass, writes the violations under
+<out>/violations and prints the per-check counts. --checkpointed
+validates bucket by bucket with a lineage manifest under <out>/manifest;
+re-running with the same --run-id resumes an interrupted run (buckets
+already done under that run id are skipped). --incremental re-validates
+only the buckets whose content changed since the last manifest entry.
+On a cluster the SparkSession comes from spark-submit's conf (no master
+hardcoded here).
 """
 
 from __future__ import annotations
@@ -30,8 +34,6 @@ def main(argv=None) -> int:
     ap.add_argument("--conversations", default=None)
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", default="run")
-    ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--salt-buckets", type=int, default=8)
     ap.add_argument("--bucket-col", default="bucket")
     ap.add_argument("--checkpointed", action="store_true",
                     help="per-bucket checkpointed mode (resumable)")
@@ -80,9 +82,9 @@ def main(argv=None) -> int:
         print(json.dumps(summary))
         return 0
 
-    vio = full_validation(plan, tdf, cdf, salt_buckets=args.salt_buckets)
+    vio = full_validation(plan, tdf, cdf)
     write_output(vio, f"{args.out.rstrip('/')}/violations", mode="overwrite")
-    counts = validation_summary(plan, tdf, cdf, salt_buckets=args.salt_buckets)
+    counts = validation_summary(plan, tdf, cdf)
     print(json.dumps({"run_id": args.run_id, "violations_by_check": counts}))
     return 0
 

@@ -106,6 +106,35 @@ def test_incremental_revalidation_only_changed_buckets(spark, bucketed_df):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_incremental_retry_same_run_id_records_each_bucket_once(spark, bucketed_df):
+    """A run_incremental retried under its run_id skips the buckets that
+    run already recorded, so its lineage covers each bucket once. Bucket
+    0 holds only clean rows: its observed violation count must be 0."""
+    plan = compile_table_spec(transcript_spec())
+    df = bucketed_df.withColumn(
+        "bucket",
+        F.when(plan.valid_predicate(), F.lit(0))
+        .otherwise(F.pmod(F.xxhash64("conv_id"), F.lit(3)) + 1)
+        .cast("int"),
+    )
+    tmp = tempfile.mkdtemp(prefix="ckpt_retry_")
+    try:
+        first = CheckpointedRun(spark, plan, tmp, run_id="n1").run_incremental(df)
+        assert first["buckets_validated"] == first["buckets_total"] == 4
+        again = CheckpointedRun(spark, plan, tmp, run_id="n1").run_incremental(df)
+        assert (again["buckets_validated"], again["buckets_carried"]) == (0, 0)
+
+        rows = CheckpointedRun(spark, plan, tmp, run_id="n1").manifest().collect()
+        assert sorted(r["bucket"] for r in rows) == [0, 1, 2, 3]
+        n_vio = {r["bucket"]: r["n_violations"] for r in rows}
+        assert n_vio[0] == 0
+        assert sum(n_vio.values()) == plan.violations(
+            df, with_message=False
+        ).count()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_validate_job_incremental_flag(spark, transcripts_df, tmp_path):
     """--incremental on the cluster entrypoint: the first nightly run
     validates every bucket, an immediate rerun over the unchanged input

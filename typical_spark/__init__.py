@@ -43,7 +43,7 @@ from typical_spark.specs import (
     register_check,
 )
 from typical_spark.compiler import compile_table_spec
-from typical_spark.plans.validation import ValidationPlan, ValidationResult
+from typical_spark.plans.validation import ValidationPlan
 from typical_spark.driverside import enforce, from_rows, load_env_settings
 from typical_spark.schema import (
     schema_conformance,
@@ -72,7 +72,6 @@ __all__ = [
     "register_check",
     "compile_table_spec",
     "ValidationPlan",
-    "ValidationResult",
     "from_rows",
     "enforce",
     "load_env_settings",

@@ -4,14 +4,27 @@ north_rule: "resumable from checkpoint with per-partition lineage +
 metrics persisted to an Iceberg manifest table". The unit of work is the
 table's partition bucket (the conv-hash `bucket` column the transcript
 table is written with — an Iceberg `bucket(conv_id)` transform on a real
-deployment). The driver walks buckets in deterministic order, runs the
-fused validation pass on each (Catalyst prunes the scan to that bucket's
-files — check .explain() for PartitionFilters), appends the bucket's
-violations to the sink, then appends one lineage row to the manifest:
+deployment). Both modes, `run` and `run_incremental`, are one loop:
 
-    (run_id, bucket, status, n_rows, n_violations, wall_s, finished_at)
+1. ONE stats pass: a map-side-combined `groupBy(bucket)` gives every
+   bucket's (n_rows, content fingerprint) — the cost of a count.
+2. ONE manifest read gives the buckets already done under this run_id
+   (skipped in both modes, so a retried run resumes instead of
+   re-recording them) and the latest (fingerprint, n_rows, n_violations)
+   per bucket across all runs.
+3. `run_incremental` carries every bucket whose fingerprint matches its
+   latest manifest row: the previous metrics go forward as
+   mode='carried' rows, all in ONE manifest append, and the bucket keeps
+   its already-written violations partition.
+4. Every other bucket is validated in deterministic order by ONE Spark
+   job: the fused validation pass on that bucket (Catalyst prunes the
+   scan to its files — check .explain() for PartitionFilters) is written
+   to the sink while an Observation counts the rows written. Then one
+   lineage row is appended to the manifest:
 
-Resume = read the manifest, subtract completed buckets, process the rest.
+    (run_id, bucket, status, n_rows, n_violations, wall_s, finished_at,
+     fingerprint, mode)
+
 A bucket is only ever marked complete AFTER its violations are durably
 written, so a crash between write and mark re-processes one bucket
 (at-least-once; the violations sink is keyed by bucket so re-writes
@@ -27,7 +40,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from typical_spark.plans.validation import ValidationPlan
@@ -56,62 +69,117 @@ class CheckpointedRun:
         self.manifest_path = os.path.join(out_dir, "manifest")
         self.violations_path = os.path.join(out_dir, "violations")
 
-    # -- manifest ------------------------------------------------------
+    # -- stats and manifest --------------------------------------------
+
+    def _bucket_stats(self, df: DataFrame) -> dict[int, tuple[int, int]]:
+        """bucket -> (n_rows, fingerprint) in ONE map-side-combined pass.
+
+        The fingerprint is order-independent: the sum of a per-row
+        xxhash64 over every column, folded into 31 bits per row so the
+        per-bucket sum stays exact (no long overflow) up to 2^32 rows per
+        bucket. Any row change/insert/delete moves the sum (duplicate
+        rows each contribute — XOR would let pairs cancel)."""
+        h = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(1 << 31))
+        rows = df.groupBy(self.bucket_col).agg(
+            F.count(F.lit(1)).alias("n"), F.sum(h).alias("fp")
+        ).collect()
+        return {r[self.bucket_col]: (r["n"], r["fp"]) for r in rows}
+
+    def bucket_fingerprints(self, df: DataFrame) -> dict[int, int]:
+        """Content fingerprint per bucket (see _bucket_stats)."""
+        return {b: fp for b, (_, fp) in self._bucket_stats(df).items()}
+
+    def _manifest_state(self) -> tuple[set[int], dict[int, tuple]]:
+        """(buckets done under this run_id, latest (fingerprint, n_rows,
+        n_violations) per bucket across ALL runs) from one manifest read."""
+        if not os.path.exists(self.manifest_path):
+            return set(), {}
+        rows = (
+            self.manifest()
+            .where(F.col("status") == "done")
+            .groupBy("bucket")
+            .agg(
+                F.bool_or(F.col("run_id") == self.run_id).alias("here"),
+                F.max_by(
+                    F.struct("fingerprint", "n_rows", "n_violations"),
+                    "finished_at",
+                ).alias("last"),
+            )
+            .collect()
+        )
+        done = {r["bucket"] for r in rows if r["here"]}
+        return done, {r["bucket"]: r["last"] for r in rows}
 
     def completed_buckets(self) -> set[int]:
-        if not os.path.exists(self.manifest_path):
-            return set()
-        m = self.spark.read.parquet(self.manifest_path)
-        rows = (
-            m.where((F.col("run_id") == self.run_id) & (F.col("status") == "done"))
-            .select("bucket").distinct().collect()
-        )
-        return {r["bucket"] for r in rows}
+        return self._manifest_state()[0]
 
-    def _append_manifest(
-        self,
-        bucket: int,
-        n_rows: int,
-        n_vio: int,
-        wall: float,
-        fingerprint: int | None = None,
-        mode: str = "validated",
-    ):
-        row = [(self.run_id, bucket, "done", n_rows, n_vio, wall,
-                time.time(), fingerprint, mode)]
-        self.spark.createDataFrame(row, MANIFEST_SCHEMA).coalesce(1).write.mode(
+    def _append_manifest(self, rows: list[tuple]) -> None:
+        """rows: (bucket, n_rows, n_violations, wall_s, fingerprint, mode)."""
+        now = time.time()
+        data = [(self.run_id, b, "done", n, nv, wall, now, fp, mode)
+                for b, n, nv, wall, fp, mode in rows]
+        self.spark.createDataFrame(data, MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.manifest_path)
 
-    # -- incremental re-validation --------------------------------------
+    # -- run -----------------------------------------------------------
 
-    def bucket_fingerprints(self, df: DataFrame) -> dict[int, int]:
-        """Order-independent content fingerprint per bucket: sum of a
-        per-row xxhash64 over every column, folded into 31 bits per row
-        so the per-bucket sum stays exact (no long overflow) up to 2^32
-        rows per bucket — ONE map-side-combined pass over the table,
-        the cost of a count. Any row change/insert/delete moves the sum
-        (duplicate rows each contribute — XOR would let pairs cancel)."""
-        h = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(1 << 31))
-        rows = df.groupBy(self.bucket_col).agg(F.sum(h).alias("fp")).collect()
-        return {r[self.bucket_col]: r["fp"] for r in rows}
-
-    def latest_fingerprints(self) -> dict[int, int]:
-        """Last recorded fingerprint per bucket across ALL runs (the
-        previous validation states to diff against)."""
-        if not os.path.exists(self.manifest_path):
-            return {}
-        m = self.spark.read.parquet(self.manifest_path)
-        rows = (
-            m.where(F.col("status") == "done")
-            .groupBy("bucket")
-            .agg(F.max_by("fingerprint", "finished_at").alias("fp"),
-                 F.max_by("n_rows", "finished_at").alias("n_rows"),
-                 F.max_by("n_violations", "finished_at").alias("n_vio"))
-            .collect()
+    def _validate_bucket(self, df: DataFrame, b: int, n_rows: int, fp: int) -> None:
+        t0 = time.time()
+        part = df.where(F.col(self.bucket_col) == b)
+        # counted on the write itself: one job evaluates the checks
+        seen = Observation()
+        vio = self.plan.violations(part, with_message=False).observe(
+            seen, F.count(F.lit(1)).alias("n")
         )
-        self._latest_meta = {r["bucket"]: (r["n_rows"], r["n_vio"]) for r in rows}
-        return {r["bucket"]: r["fp"] for r in rows}
+        # per-bucket directory -> re-running a bucket overwrites, not
+        # duplicates (exactly-once output under at-least-once driver)
+        vio.write.mode("overwrite").parquet(
+            os.path.join(self.violations_path, f"bucket={b}")
+        )
+        self._append_manifest(
+            [(b, n_rows, seen.get["n"], time.time() - t0, fp, "validated")]
+        )
+
+    def _run(
+        self, df: DataFrame, incremental: bool, fail_after: int | None = None
+    ) -> tuple[int, int, int, int]:
+        """The one bucket loop behind `run` and `run_incremental`; returns
+        (buckets_total, previously_done, validated, carried)."""
+        stats = self._bucket_stats(df)
+        done, latest = self._manifest_state()
+        carried, todo = [], []
+        for b in sorted(stats):
+            if b in done:
+                continue
+            last = latest.get(b)
+            # a NULL fingerprint never equals a fresh one
+            if incremental and last is not None and last[0] == stats[b][1]:
+                carried.append((b, last[1], last[2], 0.0, last[0], "carried"))
+            else:
+                todo.append(b)
+        if carried:
+            self._append_manifest(carried)
+        for i, b in enumerate(todo):
+            if fail_after is not None and i >= fail_after:
+                raise RuntimeError(f"injected failure after {i} buckets")
+            self._validate_bucket(df, b, *stats[b])
+        return len(stats), len(done), len(todo), len(carried)
+
+    def run(
+        self,
+        df: DataFrame,
+        fail_after: int | None = None,
+    ) -> dict:
+        """Process every not-yet-done bucket. `fail_after` aborts after N
+        buckets (test hook for kill-and-resume)."""
+        total, done, validated, _ = self._run(df, incremental=False, fail_after=fail_after)
+        return {
+            "run_id": self.run_id,
+            "buckets_total": total,
+            "buckets_previously_done": done,
+            "buckets_processed": validated,
+        }
 
     def run_incremental(self, df: DataFrame) -> dict:
         """Nightly-rerun mode: re-validate ONLY buckets whose content
@@ -121,81 +189,14 @@ class CheckpointedRun:
         changed). Unchanged buckets carry their previous metrics
         forward as a mode='carried' manifest row and keep their
         already-written violations partition — so an append-mostly
-        table pays only for the buckets that actually moved."""
-        fps = self.bucket_fingerprints(df)
-        prev = self.latest_fingerprints()
-        carried = validated = 0
-        for b in sorted(fps):
-            if b in prev and prev[b] is not None and prev[b] == fps[b]:
-                n_rows, n_vio = self._latest_meta[b]
-                self._append_manifest(
-                    b, n_rows, n_vio, 0.0, fps[b], mode="carried"
-                )
-                carried += 1
-            else:
-                self._validate_bucket(df, b, fps[b])
-                validated += 1
+        table pays only for the buckets that actually moved. Buckets
+        already done under this run_id are skipped, as in `run`."""
+        total, _, validated, carried = self._run(df, incremental=True)
         return {
             "run_id": self.run_id,
-            "buckets_total": len(fps),
+            "buckets_total": total,
             "buckets_validated": validated,
             "buckets_carried": carried,
-        }
-
-    # -- run -----------------------------------------------------------
-
-    def _validate_bucket(
-        self, df: DataFrame, b: int, fingerprint: int | None = None
-    ) -> None:
-        t0 = time.time()
-        part = df.where(F.col(self.bucket_col) == b)
-        vio = self.plan.violations(part, with_message=False)
-        # per-bucket directory -> re-running a bucket overwrites, not
-        # duplicates (exactly-once output under at-least-once driver)
-        out_dir = os.path.join(self.violations_path, f"bucket={b}")
-        vio.write.mode("overwrite").parquet(out_dir)
-        # ONE expensive check-evaluation pass per bucket: the
-        # violation count comes from the (tiny) written output and
-        # the row count from a projection-free count — a prior
-        # version ran the fused check projection twice (once for
-        # counts, once for the write), doubling every bucket's cost
-        nv = self.spark.read.parquet(out_dir).count()
-        # row count and content fingerprint in ONE projection-light pass
-        # (full runs record fingerprints too, so a later run_incremental
-        # can diff against them)
-        h = F.pmod(
-            F.xxhash64(*[F.col(c) for c in part.columns]), F.lit(1 << 31)
-        )
-        meta = part.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(h).alias("fp")
-        ).head()
-        fp = fingerprint if fingerprint is not None else meta["fp"]
-        self._append_manifest(b, meta["n"], nv, time.time() - t0, fp)
-
-    def run(
-        self,
-        df: DataFrame,
-        fail_after: int | None = None,
-    ) -> dict:
-        """Process every not-yet-done bucket. `fail_after` aborts after N
-        buckets (test hook for kill-and-resume)."""
-        buckets = sorted(
-            r[0]
-            for r in df.select(self.bucket_col).distinct().collect()
-        )
-        done = self.completed_buckets()
-        todo = [b for b in buckets if b not in done]
-        processed = 0
-        for b in todo:
-            if fail_after is not None and processed >= fail_after:
-                raise RuntimeError(f"injected failure after {processed} buckets")
-            self._validate_bucket(df, b)
-            processed += 1
-        return {
-            "run_id": self.run_id,
-            "buckets_total": len(buckets),
-            "buckets_previously_done": len(done),
-            "buckets_processed": processed,
         }
 
     def violations(self) -> DataFrame:
@@ -204,7 +205,7 @@ class CheckpointedRun:
         )
 
     def manifest(self) -> DataFrame:
-        return self.spark.read.parquet(self.manifest_path)
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_path)
 
 
 class StageCheckpoint:

@@ -57,9 +57,10 @@ def full_validation(
     task (they shuffle by the dup key). Duplicate ranks are the plain keep-first
     row_number over (ts, role) — pytest-pinned equal to the salted
     duplicate_rows output on the transcript family. `salt_buckets` is
-    kept for API stability; the fused pass's only window partition key is
-    conv_id — the same skew boundary ordering_violations always had — and
-    a genuinely pathological key group can still use
+    accepted and ignored: the benchmark workloads (perfbench/workloads.py)
+    and bench.py still pass it. The fused pass's only window partition
+    key is conv_id — the same skew boundary ordering_violations always
+    had — and a genuinely pathological key group can still use
     duplicate_rows(salt_buckets=N) standalone.
     """
     key = list(plan.spec.key_columns)

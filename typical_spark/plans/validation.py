@@ -163,25 +163,3 @@ class ValidationPlan:
             agg.select("partition_id", "n_rows", stack.alias("check_id", "n_violations"))
             .withColumn("pass", F.col("n_violations") == 0)
         )
-
-
-@dataclass
-class ValidationResult:
-    """Materialized run summary (driver-side), for the manifest table."""
-
-    n_rows: int
-    n_violations: int
-    by_check: dict
-
-    @classmethod
-    def from_run(cls, plan: ValidationPlan, df: DataFrame) -> "ValidationResult":
-        vio = plan.violations(df, with_message=False)
-        counts = {
-            r["check_id"]: r["n"]
-            for r in vio.groupBy("check_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        return cls(
-            n_rows=df.count(),
-            n_violations=sum(counts.values()),
-            by_check=counts,
-        )
