@@ -249,3 +249,56 @@ def test_decimal_declared_dtype_raw_carrier_no_scale_rounding(spark):
                  tdf, with_message=False).collect()}
     assert not any(rid == 0 for rid, _ in got_t)
     assert (1, "number_range") in got_t
+
+
+def test_spec_without_checks_yields_typed_empty_arrays(spark):
+    """A spec whose fields declare no checks compiles to zero checks: the
+    violations table is empty with the usual columns, and annotate gives
+    an empty array<struct> per row (not a string, not a crash)."""
+    plan = compile_table_spec(
+        TableSpec(name="t", key_columns=("k",), fields=(FieldSpec("k", "string"),))
+    )
+    assert plan.checks == ()
+    df = spark.createDataFrame([("a",), ("b",)], "k string")
+    vio = plan.violations(df)
+    assert vio.columns == ["k", "column", "check_id", "observed", "expected", "message"]
+    assert vio.count() == 0
+    ann = plan.annotate(df)
+    el = ann.schema["_violations"].dataType.elementType
+    assert el.fieldNames() == ["column", "check_id", "observed", "expected"]
+    assert [r["_violations"] for r in ann.collect()] == [[], []]
+
+
+def test_verdicts_match_violation_counts(spark, transcripts_df):
+    """verdicts' per-check n_violations equals the violations table's
+    per-check row count (checks sharing an id, e.g. not_null on several
+    columns, add up); with one partition every check appears once."""
+    from typical_spark.specs import transcript_spec
+
+    plan = compile_table_spec(transcript_spec())
+    n = transcripts_df.count()
+    counts = {
+        r["check_id"]: r["count"]
+        for r in plan.violations(transcripts_df).groupBy("check_id").count().collect()
+    }
+    cids = sorted({c.check_id for c in plan.checks})
+    want = sorted(
+        ("all", cid, n, counts.get(cid, 0), cid not in counts) for cid in cids
+    )
+    got = plan.verdicts(transcripts_df, F.lit("all")).select(
+        "partition_id", "check_id", "n_rows", "n_violations", "pass"
+    ).collect()
+    assert sorted(tuple(r) for r in got) == want
+    # every check fails somewhere in the fixture; its valid rows pass all
+    valid, _ = plan.split(transcripts_df)
+    assert {
+        (r["check_id"], r["n_violations"], r["pass"])
+        for r in plan.verdicts(valid, F.lit("all")).collect()
+    } == {(cid, 0, True) for cid in cids}
+    # default partition_id = input partition: per-partition rows add up
+    per_part = plan.verdicts(transcripts_df).groupBy("check_id").agg(
+        F.sum("n_rows").alias("n_rows"), F.sum("n_violations").alias("n_vio")
+    )
+    assert {r["check_id"]: (r["n_rows"], r["n_vio"]) for r in per_part.collect()} == {
+        cid: (n, counts.get(cid, 0)) for cid in cids
+    }

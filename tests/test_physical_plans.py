@@ -74,6 +74,91 @@ def test_fused_pass_has_no_shuffle(spark, events):
     assert "codegen id" in p  # whole-stage codegen spans cover the checks
 
 
+def _executed_plan_str(df) -> str:
+    """Formatted plan after running df (AQE's final plan included)."""
+    df.collect()
+    return _plan_str(df)
+
+
+def test_validation_passes_run_no_lambda(spark, transcripts_df):
+    """A lambda (filter / array_compact) anywhere in a per-row check array
+    is a CodegenFallback: every check expression in it would then run
+    interpreted per row, though the plan still shows codegen ids."""
+    from typical_spark.operators.ordering import ordering_violations
+    from typical_spark.pipeline import full_validation
+
+    plan = compile_table_spec(transcript_spec())
+    conv = transcripts_df.select("conv_id").distinct().limit(50)
+    keyed = transcripts_df.where("conv_id is not null")
+    for df in (
+        plan.violations(transcripts_df),
+        full_validation(plan, transcripts_df, conv),
+        ordering_violations(keyed, ["conv_id"], "turn_idx", ts_col="ts"),
+    ):
+        p = _executed_plan_str(df)
+        assert "lambdafunction" not in p, p[:3000]
+
+
+def _tree(p: str) -> list[str]:
+    """The node lines of a formatted plan (before the per-node details)."""
+    return p.split("\n\n")[0].splitlines()
+
+
+def _first_union_branch(tree: list[str]) -> list[str]:
+    """Lines of the first child subtree of the plan's Union node."""
+    i = next(i for i, l in enumerate(tree) if "Union (" in l)
+    col = tree[i].index("Union")
+    return [l for l in tree[i + 1:] if len(l) > col and l[col] == ":"]
+
+
+def test_full_validation_broadcasts_dim_once(spark, transcripts_df):
+    """The conversations dim joins only the non-null conv_id branch: one
+    dedup aggregate, one BroadcastExchange (a NULL conv_id never matches,
+    so a join on the null branch is always empty work)."""
+    from typical_spark.pipeline import full_validation
+
+    plan = compile_table_spec(transcript_spec())
+    conv = transcripts_df.select("conv_id").distinct()
+    tree = _tree(_plan_str(full_validation(plan, transcripts_df, conv)))
+    assert sum("BroadcastExchange" in l for l in tree) == 1, "\n".join(tree)
+
+
+def test_bucketed_full_validation_conv_branch_has_no_exchange_or_sort(
+    spark, transcripts_df
+):
+    """On a conv_id-bucketed table sorted by (conv_id, turn_idx, ts, role),
+    the non-null branch of full_validation — the whole table in practice —
+    windows straight off the scan: no Exchange, no Sort. This relies on
+    spark.sql.legacy.bucketedTableScan.outputOrdering and one file per
+    bucket; a second file in a bucket would silently bring the Sort back."""
+    from typical_spark.pipeline import full_validation
+    from typical_spark.sources.tables import read_bucketed, write_bucketed
+
+    try:
+        # one writer task per bucket -> one file per bucket
+        write_bucketed(
+            transcripts_df.repartition(8, "conv_id"), "bk_fv_transcripts",
+            ["conv_id"], n_buckets=8,
+            sort_cols=["conv_id", "turn_idx", "ts", "role"],
+        )
+        t = read_bucketed(spark, "bk_fv_transcripts")
+        conv = transcripts_df.select("conv_id").distinct()
+        plan = compile_table_spec(transcript_spec())
+        tree = _tree(_executed_plan_str(full_validation(plan, t, conv)))
+        branch = _first_union_branch(tree)
+        assert any("Window" in l for l in branch), "\n".join(tree)
+        # the only exchange on this branch feeds the dim's broadcast
+        bx = next(i for i, l in enumerate(branch) if "BroadcastExchange" in l)
+        for i, l in enumerate(branch):
+            assert "Sort (" not in l, "\n".join(tree)
+            if "Exchange (" in l and "BroadcastExchange" not in l:
+                assert i > bx and l.index("Exchange") > branch[bx].index("Broadcast"), (
+                    "\n".join(tree)
+                )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bk_fv_transcripts")
+
+
 def test_referential_uses_broadcast_anti_join(spark, events):
     dim = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     out = referential_violations(events, dim, ["user_id"], ["c_custkey"])

@@ -540,11 +540,16 @@ def dedup_groups_connected(pairs: DataFrame, max_iterations: int = 25) -> DataFr
         .withColumn("label", F.col("id"))
         .localCheckpoint()
     )
+    label_type = labels.schema["label"].dataType
     converged = False
     for _ in range(max_iterations):
         nbr = (
             edges.join(labels, edges["dst"] == labels["id"])
-            .select(edges["src"].alias("id"), F.col("label"), F.lit(None).alias("_old"))
+            .select(
+                edges["src"].alias("id"),
+                F.col("label"),
+                F.lit(None).cast(label_type).alias("_old"),
+            )
         )
         # Carry each node's OWN previous label through the same aggregate
         # (self rows tag it in `_old`; labels are a min-semilattice so

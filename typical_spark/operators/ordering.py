@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from typical_spark.plans.validation import violation_array
+
 
 def ordering_violations(
     df: DataFrame,
@@ -65,7 +67,7 @@ def ordering_violations(
     checks = []
     d = F.col(order_col) - F.col("_prev_o")
     checks.append(
-        F.when(
+        (
             F.col("_prev_o").isNotNull() & (d == 0),
             F.struct(
                 F.lit("order_duplicate").alias("check_id"),
@@ -76,7 +78,7 @@ def ordering_violations(
     )
     if require_contiguous:
         checks.append(
-            F.when(
+            (
                 F.col("_prev_o").isNotNull() & (d > 1),
                 F.struct(
                     F.lit("order_gap").alias("check_id"),
@@ -89,7 +91,7 @@ def ordering_violations(
         )
     if ts_col and require_ts_monotonic:
         checks.append(
-            F.when(
+            (
                 F.col("_prev_ts").isNotNull()
                 & F.col(ts_col).isNotNull()
                 & (F.col(ts_col) < F.col("_prev_ts"))
@@ -103,7 +105,7 @@ def ordering_violations(
                 ),
             )
         )
-    arr = F.array_compact(F.array(*checks))
+    arr = violation_array(checks, fields=("check_id", "observed", "expected"))
     # no size() pre-filter: explode drops empty arrays itself, and a
     # filter would be pushed below the projection, evaluating the check
     # array twice per row

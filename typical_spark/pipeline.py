@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from typical_spark.plans.validation import ValidationPlan
+from typical_spark.plans.validation import ValidationPlan, violation_array
 
 VIOLATION_SCHEMA_COLS = ("conv_id", "turn_idx", "column", "check_id", "observed", "expected")
 
@@ -43,8 +43,11 @@ def full_validation(
     one scan and ONE exchange suffice:
 
       scan -> fused row-check array (text etc. never leaves the scan)
-           -> broadcast-join the conversations dim (scan-local, pre-shuffle)
-           -> conv_id IS NOT NULL: lag() over (conv_id) = ordering checks
+           -> conv_id IS NOT NULL: broadcast-join the conversations dim
+              (scan-local, pre-shuffle; the dim is deduplicated and
+              broadcast once — NULL conv_id rows carry a NULL `_dim`
+              instead, since they can never match)
+              lag() over (conv_id) = ordering checks
               + row_number over (conv_id, turn_idx) = keep-first dup rank
               (exchange AND sort both elided on a bucketed scan sorted
               by (conv_id, turn_idx, ts, role))
@@ -70,15 +73,6 @@ def full_validation(
         F.col(kc), F.col(oc), F.col("ts"), F.col("role"),
         plan._violation_array().alias("_rv"),
     )
-    has_ref = conversations is not None
-    if has_ref:
-        dim = (
-            conversations.select(F.col(kc))
-            .dropDuplicates([kc])
-            .withColumn("_dim", F.lit(True))
-        )
-        src = src.join(F.broadcast(dim), [kc], "left")
-
     # Two branches on conv_id nullability, unioned before the explode.
     # Non-null convs (≈ the whole table) window on conv_id ALONE with
     # order (turn_idx, ts, role): the required sort (conv_id, turn_idx,
@@ -97,6 +91,20 @@ def full_validation(
     # disjoint row sets) plus one extra narrow scan.
     conv_rows = src.where(F.col(kc).isNotNull())
     null_rows = src.where(F.col(kc).isNull())
+
+    # The dim joins the non-null branch only: a NULL conv_id never
+    # matches, so the null branch carries a NULL `_dim` (a join there
+    # would plan a second dedup aggregate + broadcast of the dim, since
+    # each branch pushes its own conv_id filter into the dim scan).
+    has_ref = conversations is not None
+    if has_ref:
+        dim = (
+            conversations.select(F.col(kc))
+            .dropDuplicates([kc])
+            .withColumn("_dim", F.lit(True))
+        )
+        conv_rows = conv_rows.join(F.broadcast(dim), [kc], "left")
+        null_rows = null_rows.withColumn("_dim", F.lit(None).cast("boolean"))
 
     w_ord = Window.partitionBy(kc).orderBy(
         F.col(oc).asc(), F.col("ts").asc(), F.col("role").asc()
@@ -134,7 +142,7 @@ def full_validation(
         )
 
     extras = [
-        F.when(
+        (
             F.col("_dr") > 1,
             _v(
                 "unique_key",
@@ -143,7 +151,7 @@ def full_validation(
                 key[-1],
             ),
         ),
-        F.when(
+        (
             conv_nn & F.col("_po").isNotNull() & (d == 0),
             _v(
                 "order_duplicate",
@@ -152,7 +160,7 @@ def full_validation(
                 oc,
             ),
         ),
-        F.when(
+        (
             conv_nn & F.col("_po").isNotNull() & (d > 1),
             _v(
                 "order_gap",
@@ -161,7 +169,7 @@ def full_validation(
                 oc,
             ),
         ),
-        F.when(
+        (
             conv_nn
             & F.col("_pts").isNotNull()
             & F.col("ts").isNotNull()
@@ -177,7 +185,7 @@ def full_validation(
     ]
     if has_ref:
         extras.append(
-            F.when(
+            (
                 conv_nn & F.col("_dim").isNull(),
                 _v(
                     "referential",
@@ -188,7 +196,7 @@ def full_validation(
             )
         )
 
-    combined = F.concat(F.col("_rv"), F.array_compact(F.array(*extras)))
+    combined = F.concat(F.col("_rv"), violation_array(extras))
     return (
         ann.select(F.col(kc), F.col(oc), F.explode(combined).alias("v"))
         .select(kc, oc, "v.*")

@@ -6,23 +6,32 @@ compiled once on the driver, then applied to any number of rows. Where the
 reference executes one closure per value, the plan executes ONE fused
 narrow projection per table scan:
 
-    df.select(keys…, array_compact(array(
-        when(viol_1, struct(...)), when(viol_2, struct(...)), …)))
+    df.select(keys…, concat(
+        when(viol_1, array(struct(...))).otherwise(<empty array>),
+        when(viol_2, array(struct(...))).otherwise(<empty array>), …))
 
-— all checks in a single whole-stage-codegen span, no shuffle, no second
+— all checks in one whole-stage-codegen span, no shuffle, no second
 scan. Violations explode out of the array; valid rows are `size(arr)==0`.
 At 100 TB this matters: the naive per-check `df.where(~pred)` plan scans
 the table N_checks times; the fused plan scans it once and Parquet reads
 only the checked columns (column pruning keeps `ReadSchema` narrow).
+
+Keep higher-order functions (`filter`, `array_compact`, which rewrites to
+`filter(arr, x -> isnotnull(x))`) out of any per-row check array: Spark's
+`ArrayFilter` is a `CodegenFallback`, so one lambda in the array sends
+every check expression inside it through interpreted `eval()` per row.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 from functools import reduce
+from operator import add
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from typical_spark.compiler import CompiledCheck
 from typical_spark.specs import TableSpec
@@ -30,6 +39,29 @@ from typical_spark.specs import TableSpec
 # Stable violation-row schema (analog of ConstraintValueError fields,
 # reference typic/constraints/common.py:169-173).
 VIOLATION_COLUMNS = ("column", "check_id", "observed", "expected", "message")
+
+
+def violation_array(
+    entries: Sequence[tuple[Column, Column]],
+    fields: Sequence[str] = VIOLATION_COLUMNS[:4],
+) -> Column:
+    """array<struct> of the payloads whose condition is true, in entry
+    order: `concat(when(cond, array(payload)).otherwise(<empty>), …)`.
+
+    Every piece is a codegen'd expression (no lambda; see the module
+    docstring). `fields` names the string fields of each payload struct;
+    the empty array is typed with them, all NOT NULL, so the result's
+    element nullability is exactly the payloads' own and the array has
+    `containsNull=false`. Zero entries give that typed empty array.
+    """
+    empty = F.array().cast(
+        ArrayType(StructType([StructField(f, StringType(), False) for f in fields]), False)
+    )
+    if not entries:
+        return empty
+    return F.concat(
+        *[F.when(cond, F.array(payload)).otherwise(empty) for cond, payload in entries]
+    )
 
 
 @dataclass(frozen=True)
@@ -71,16 +103,18 @@ class ValidationPlan:
     # ---- the fused violation pass ------------------------------------
 
     def _violation_array(self) -> Column:
-        entries = []
-        for c in self.checks:
-            payload = F.struct(
-                F.lit(c.column).alias("column"),
-                F.lit(c.check_id).alias("check_id"),
-                c.observed.alias("observed"),
-                F.lit(c.expected).alias("expected"),
+        return violation_array([
+            (
+                c.violation_cond,
+                F.struct(
+                    F.lit(c.column).alias("column"),
+                    F.lit(c.check_id).alias("check_id"),
+                    c.observed.alias("observed"),
+                    F.lit(c.expected).alias("expected"),
+                ),
             )
-            entries.append(F.when(c.violation_cond, payload))
-        return F.array_compact(F.array(*entries))
+            for c in self.checks
+        ])
 
     def annotate(self, df: DataFrame, col: str = "_violations") -> DataFrame:
         """df + an array<struct> column of this row's violations (empty
@@ -139,17 +173,16 @@ class ValidationPlan:
         (partition_id, check_id, n_rows, n_violations, pass).
         """
         pid = partition_col if partition_col is not None else F.spark_partition_id()
-        ann = df.select(pid.alias("partition_id"), self._violation_array().alias("_v"))
-        per_check = [
-            F.sum(
-                F.size(F.filter("_v", lambda v: v["check_id"] == F.lit(cid)))
-            ).alias(cid)
-            for cid in sorted({c.check_id for c in self.checks})
-        ]
-        agg = ann.groupBy("partition_id").agg(
-            F.count(F.lit(1)).alias("n_rows"), *per_check
+        # n_violations of an id = its (row, check) violations: one
+        # codegen'd count per check, summed over the checks sharing the id
+        per_id: dict[str, list[Column]] = {}
+        for c in self.checks:
+            per_id.setdefault(c.check_id, []).append(F.count(F.when(c.violation_cond, 1)))
+        cids = sorted(per_id)
+        agg = df.groupBy(pid.alias("partition_id")).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            *[reduce(add, per_id[cid]).alias(cid) for cid in cids],
         )
-        cids = sorted({c.check_id for c in self.checks})
         stack = F.explode(
             F.map_from_arrays(
                 F.array(*[F.lit(c) for c in cids]),
